@@ -19,6 +19,12 @@ under ``prepare``'s 0.5 cut; half of those carry stopwords, which lift
 them over it. The designed gate pass rate is therefore 90% of the valid
 pages.
 
+These shares (10% exact copies, 20% near copies in 2-link chains of
+4-word edits, 20% tables, a 90% gate pass rate) are design choices, not a
+measured duplicate mix of real crawls: they are set so that LSH
+verification finds pairs and ``dup_clusters`` needs at least two rounds.
+A gain on this table is a gain on this table, not on real corpora.
+
 :func:`expected_corpus` recomputes what ``prepare_training_data`` (pairs
 mode, defaults) must keep, without Spark: the pure-Python cascade, the
 quality-gate formula, exact dedup on the text digest, MinHash-LSH with

@@ -164,9 +164,10 @@ def vm_hwm_mb(pid: int) -> float:
 class MemorySampler:
     """Samples the bytes held by persisted RDDs every 0.25 s and keeps the
     peak. On exit, runs a full collection and records the JVM heap still
-    in use (``live_mb``): the memory the passes left behind. Unlike the
-    JVM's RSS or the heap in use after whichever collection last ran, this
-    repeats from run to run."""
+    in use (``live_mb``): the memory the passes left behind, not the
+    memory they used while running. Unlike the JVM's RSS or the peak heap
+    in use after the collections that ran during the passes, this repeats
+    from run to run."""
 
     def __init__(self, spark, period_s: float = 0.25):
         self._jvm = spark.sparkContext._jvm

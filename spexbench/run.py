@@ -130,7 +130,7 @@ def main() -> int:
     with open(result_path) as f:
         res = json.load(f)
 
-    guards = {k: res[k] for k in ("host.steal_frac", "host.control_mib_s",
+    guards = {k: res[k] for k in ("host.steal_frac", "host.control_mib_s", "first_pass_s",
                                   "pages_per_s", "core_s_per_kpage")}
     guards["pass_s"] = [round(p["s"], 3) for p in res["passes"]]
     print("guards " + json.dumps(guards))
